@@ -36,16 +36,22 @@ def _sf_name() -> str:
 
 def ensure_bench_pages(spark, sf: str) -> str:
     """Build (once) the clone-scaled pages parquet for this sf, with a mild
-    hot-author skew so the salted join path is exercised."""
+    hot-author skew so the salted join path is exercised.  The cache path
+    keys on a digest of the seed lines as well as (sf, clones), so a corpus
+    cloned from one line set is never reused for another."""
+    import hashlib
+
+    from olkg.fixtures import corpus_lines
+    from olkg.pagesgen import build_pages_df_distributed
     clones = int(os.environ.get("OLKG_BENCH_CLONES",
                                 _SF_CLONES.get(sf, 200)))
-    path = os.path.join(tempfile.gettempdir(), f"olkg_bench_pages_{sf}_{clones}")
+    lines = corpus_lines(include_reference=True)
+    digest = hashlib.sha256("\n".join(lines).encode("utf-8")).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(),
+                        f"olkg_bench_pages_{sf}_{clones}_{digest}")
     marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return path
-    from olkg.fixtures import corpus_lines
-    from olkg.pagesgen import build_pages_df_distributed
-    lines = corpus_lines(include_reference=True)
     df = build_pages_df_distributed(
         spark, lines, clones=clones, rewrite_refs=True,
         skew_hot_author="/authors/HOT1A", skew_fraction=0.1,
@@ -94,13 +100,10 @@ def main() -> None:
     # (BASELINE.md §protocol), so both pipelines run N_TRIALS times
     # INTERLEAVED (fast, durable, fast, durable, ...) — host drift hits both
     # equally — and the reported number is the per-query MEDIAN, with every
-    # trial on record.  The corpus size estimate is computed ONCE and passed
-    # in, so the auto-dedup sampler's driver jobs don't pollute the timings.
+    # trial on record.
     import statistics
 
-    from olkg.pipeline import estimate_extract_size
     n_trials = int(os.environ.get("OLKG_BENCH_TRIALS", "3"))
-    est_total, est_per_task = estimate_extract_size(spark, pages_path)
     trials: dict[str, list[float]] = {"kg_pipeline": [],
                                       "kg_pipeline_postwrite": [],
                                       "kg_pipeline_durable": []}
@@ -110,9 +113,7 @@ def main() -> None:
         t0 = time.time()
         m = run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
                               hot_threshold=50_000, num_salts=16,
-                              with_canonical_map=True,
-                              est_total_rows=est_total,
-                              est_rows_per_task=est_per_task)
+                              with_canonical_map=True)
         trials["kg_pipeline"].append(round(time.time() - t0, 3))
         shutil.rmtree(out_dir, ignore_errors=True)
 

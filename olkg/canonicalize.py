@@ -33,57 +33,11 @@ from . import vocab as V
 _EDGE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
 
 
-# Measured on this host (BENCH/BASELINE.md): map-side partial aggregation
-# beats prepartition below ~1-2M mostly-unique rows per map task and loses
-# 3x above it.  'auto' flips at the midpoint and sizes reduce partitions to
-# ~1M rows each.
-AUTO_PREPARTITION_ROWS_PER_TASK = 1_500_000
-AUTO_TARGET_ROWS_PER_PARTITION = 1_000_000
-
-
-def plan_dedup(total_rows: int, rows_per_task: float) -> tuple[str, int | None]:
-    """Pure sizing rule for :func:`dedup_edges` strategy='auto': returns
-    (strategy, num_partitions).  Separated from the Spark sampler so the
-    decision boundary is unit-testable with arbitrary scales."""
-    if rows_per_task > AUTO_PREPARTITION_ROWS_PER_TASK:
-        n = max(1, round(total_rows / AUTO_TARGET_ROWS_PER_PARTITION))
-        return "prepartition", n
-    return "partial", None
-
-
-def dedup_edges(triples: DataFrame, strategy: str = "partial",
-                num_partitions: int | None = None,
-                est_total_rows: int | None = None,
-                est_rows_per_task: float | None = None) -> DataFrame:
-    """A4: distinct (subj, pred, obj, obj_kind, obj_datatype).
-
-    strategy='partial' (default): plain dropDuplicates — hash aggregate with
-    map-side partial dedup.  Right when per-map-task row counts fit the hash
-    map or duplicates are common.
-
-    strategy='prepartition': explicit repartition on the dedup key first, so
-    Catalyst plans ONE complete aggregate and skips the map-side partial
-    pass.  Web-scale triple streams are mostly UNIQUE rows — partial
-    aggregation then reduces nothing while building (and spilling) a giant
-    per-task hash map.  Measured on 2.4M pages / 57M rows at 8 cores:
-    300 s (partial) → 111 s (prepartition, ≈ the no-dedup write cost).
-
-    strategy='auto': pick by data size via :func:`plan_dedup` from the
-    caller-supplied estimates (``est_total_rows``, ``est_rows_per_task`` —
-    see olkg.pipeline.estimate_extract_size for the cheap sampler).  With
-    no estimates, 'auto' degrades to 'partial' (the small-corpus default)."""
-    if strategy == "auto":
-        if est_rows_per_task is not None:
-            strategy, auto_n = plan_dedup(est_total_rows or 0,
-                                          est_rows_per_task)
-            if num_partitions is None:
-                num_partitions = auto_n
-        else:
-            strategy = "partial"
-    if strategy == "prepartition":
-        pre = (triples.repartition(num_partitions, *_EDGE_COLS)
-               if num_partitions else triples.repartition(*_EDGE_COLS))
-        return pre.dropDuplicates(_EDGE_COLS)
+def dedup_edges(triples: DataFrame) -> DataFrame:
+    """A4: distinct (subj, pred, obj, obj_kind, obj_datatype) — the fused
+    dedup (hash aggregate with map-side partial dedup).  Streams far past
+    ~1.5M mostly-unique rows per map task, where the partial pass reduces
+    nothing, belong on the raw-table path (:func:`dedup_from_raw`)."""
     return triples.dropDuplicates(_EDGE_COLS)
 
 
@@ -112,8 +66,6 @@ def with_dedup_write_cols(stream: DataFrame) -> DataFrame:
 def dedup_from_raw(raw: DataFrame,
                    max_broadcast_drops: int = 20_000_000,
                    stats: dict | None = None,
-                   detect: str = "hashagg",
-                   detect_partitions: int | None = None,
                    cleanup: list | None = None) -> DataFrame:
     """A4 dedup as a SEPARATE job over a materialized raw edge table (written
     with :func:`with_dedup_write_cols` columns) — the decoupled alternative to
@@ -127,32 +79,23 @@ def dedup_from_raw(raw: DataFrame,
     this job, which never shuffles the full rows at all on the broadcast
     plan.
 
-    DETECT formulations (``detect=``), both scanning only the three long
-    columns (h1, h2, uid — columnar pruning, no string decode):
-
-    - ``'hashagg'`` (default): explicit repartition on (h1, h2) then ONE
-      complete hash aggregate — groupBy(h1, h2) → (min uid, count) — kept
-      only where count > 1.  The repartition-first shape skips the map-side
-      partial pass, which on a mostly-UNIQUE key stream reduces nothing
-      while building a giant per-task hash map (the dedup_edges
-      'prepartition' lesson, 3x measured), and a hash aggregate never sorts
-      — the phase probe showed the sort-based window detect is
-      spill-sensitive at low parallelism (anti-scaled in one 2.4M trial).
-      The dup-GROUP table (one 24-byte row per duplicated hash group,
-      regardless of group size) is the only detect output.
-    - ``'window'``: min/count window over (h1, h2) → per-row keep marks —
-      one narrow shuffle plus a per-partition SORT of the projection; the
-      round-4 formulation, kept for A/B measurement.
+    DETECT scans only the three long columns (h1, h2, uid — columnar
+    pruning, no string decode): an explicit repartition on (h1, h2) then
+    ONE complete hash aggregate — groupBy(h1, h2) → (min uid, count) — kept
+    only where count > 1.  The repartition-first shape skips the map-side
+    partial pass, which on a mostly-UNIQUE key stream reduces nothing while
+    building a giant per-task hash map, and a hash aggregate never sorts.
+    The dup-GROUP table (one 24-byte row per duplicated hash group,
+    regardless of group size) is the only detect output.
 
     REMOVE: when the detected duplicate volume fits ``max_broadcast_drops``
-    the small side is BROADCAST and the full rows move ZERO times —
-    'hashagg' joins the group table back on (h1, h2) keeping rows with no
-    group entry or uid == min (so it never materializes a per-row drop
-    set at all); 'window' anti-joins the drop set on uid.  Beyond the
-    broadcast bound the join shuffles (SHUFFLE_HASH — volume equivalent to
-    the fused plan's shuffle; at that scale a real cluster's aggregate
-    shuffle bandwidth is the resource that grows with node count, so the
-    full shuffle is the right plan there anyway).
+    the group table is BROADCAST and joined back on (h1, h2), keeping rows
+    with no group entry or uid == min, so the full rows move ZERO times and
+    no per-row drop set is ever materialized.  Beyond the broadcast bound
+    the join shuffles (SHUFFLE_HASH — volume equivalent to the fused plan's
+    shuffle; at that scale a real cluster's aggregate shuffle bandwidth is
+    the resource that grows with node count, so the full shuffle is the
+    right plan there anyway).
 
     Exactness rests on the 128-bit row identity: two distinct rows dropped
     as duplicates require an (h1, h2) double collision, P ≈ n²/2¹²⁹
@@ -176,57 +119,33 @@ def dedup_from_raw(raw: DataFrame,
                "its entries after materializing the output")
         warnings.warn(msg, UserWarning, stacklevel=2)
         logging.getLogger(__name__).warning(msg)
-    proj = raw.select("h1", "h2", "uid")
-    if detect == "hashagg":
-        pre = (proj.repartition(detect_partitions, "h1", "h2")
-               if detect_partitions else proj.repartition("h1", "h2"))
-        groups = (pre.groupBy("h1", "h2")
-                  .agg(F.min("uid").alias("_keep"),
-                       F.count(F.lit(1)).alias("_n"))
-                  .filter(F.col("_n") > 1)
-                  .persist())
-        if cleanup is not None:
-            cleanup.append(groups)
-        census = groups.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.sum(F.col("_n") - F.lit(1)).alias("d")).first()
-        n_groups, n_drops = census["g"] or 0, census["d"] or 0
-        small = n_drops <= max_broadcast_drops
-        right = groups.select("h1", "h2", "_keep")
-        if small:
-            joined = raw.join(F.broadcast(right), ["h1", "h2"], "left")
-        else:
-            joined = raw.join(right.hint("SHUFFLE_HASH"),
-                              ["h1", "h2"], "left")
-        out = (joined
-               .filter(F.col("_keep").isNull()
-                       | (F.col("uid") == F.col("_keep")))
-               .select(*_EDGE_COLS))
-        if stats is not None:
-            stats["n_dup_groups"] = n_groups
-            stats["n_dropped_dups"] = n_drops
-            stats["dedup_plan"] = ("hashagg-broadcast" if small
-                                   else "hashagg-shuffle")
-        return out
-    if detect != "window":
-        raise ValueError(f"unknown detect formulation: {detect!r}")
-    w = Window.partitionBy("h1", "h2")
-    drops = (proj
-             .withColumn("_keep", F.min("uid").over(w))
-             .withColumn("_n", F.count(F.lit(1)).over(w))
-             .filter((F.col("_n") > 1) & (F.col("uid") != F.col("_keep")))
-             .select("uid")
-             .persist())
+    groups = (raw.select("h1", "h2", "uid")
+              .repartition("h1", "h2")
+              .groupBy("h1", "h2")
+              .agg(F.min("uid").alias("_keep"),
+                   F.count(F.lit(1)).alias("_n"))
+              .filter(F.col("_n") > 1)
+              .persist())
     if cleanup is not None:
-        cleanup.append(drops)
-    n_drops = drops.count()
+        cleanup.append(groups)
+    census = groups.agg(
+        F.count(F.lit(1)).alias("g"),
+        F.sum(F.col("_n") - F.lit(1)).alias("d")).first()
+    n_groups, n_drops = census["g"] or 0, census["d"] or 0
     small = n_drops <= max_broadcast_drops
-    right = F.broadcast(drops) if small else drops
-    out = raw.join(right, "uid", "left_anti").select(*_EDGE_COLS)
+    right = groups.select("h1", "h2", "_keep")
+    if small:
+        joined = raw.join(F.broadcast(right), ["h1", "h2"], "left")
+    else:
+        joined = raw.join(right.hint("SHUFFLE_HASH"), ["h1", "h2"], "left")
+    out = (joined
+           .filter(F.col("_keep").isNull() | (F.col("uid") == F.col("_keep")))
+           .select(*_EDGE_COLS))
     if stats is not None:
+        stats["n_dup_groups"] = n_groups
         stats["n_dropped_dups"] = n_drops
-        stats["dedup_plan"] = ("hashdrop-broadcast" if small
-                               else "hashdrop-shuffle")
+        stats["dedup_plan"] = ("hashagg-broadcast" if small
+                               else "hashagg-shuffle")
     return out
 
 
@@ -597,12 +516,3 @@ def canonical_map(edges: DataFrame, author_names: DataFrame | None = None,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)
 
-
-def sameas_edges_from_map(cmap: DataFrame) -> DataFrame:
-    """owl:sameAs edges materializing non-trivial cluster memberships."""
-    return (cmap.filter(F.col("entity") != F.col("canonical_id"))
-            .select(F.col("entity").alias("subj"),
-                    F.lit(V.OWL_SAME_AS).alias("pred"),
-                    F.col("canonical_id").alias("obj"),
-                    F.lit("uri").alias("obj_kind"),
-                    F.lit(None).cast("string").alias("obj_datatype")))

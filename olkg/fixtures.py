@@ -2,8 +2,9 @@
 
 The engine ships its own synthetic corpus (generated below, covering every
 JSON field shape the reference's parsers handle — see FIXTURES.md §2) so the
-repo is standalone; when the reference corpus is present at
-/root/reference/specs/data it is folded in for parity coverage.
+repo is standalone; the reference's 20 spec fixture lines (vendored under
+tests/fixtures/specs_data, or the reference checkout's own copy when present)
+are folded in for parity coverage.
 """
 
 from __future__ import annotations
@@ -12,6 +13,9 @@ import json
 from pathlib import Path
 
 REF_DATA = Path("/root/reference/specs/data")
+if not REF_DATA.exists():
+    REF_DATA = (Path(__file__).resolve().parent.parent
+                / "tests" / "fixtures" / "specs_data")
 
 # LCSH label→URI dimension rows (the pairs the reference specs seed into
 # Redis: specs/edition_spec.rb:318-322, specs/work_spec.rb:137-145)

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from . import fsio
 from . import vocab as V
 from .fsio import pjoin
-from .schema import LINEAGE_SCHEMA
 
 
 def _stage_path(out_dir: str, stage: str) -> str:
@@ -87,13 +86,6 @@ def append_lineage(spark: SparkSession, out_dir: str, run_id: str, stage: str,
                         F.lit(wall_ms).cast("long").alias("wall_ms"),
                         F.lit(detail).cast("string").alias("detail")))
     per_part.write.mode("append").parquet(pjoin(out_dir, "lineage"))
-
-
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = pjoin(out_dir, "lineage")
-    if not fsio.exists(spark, path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(path)
 
 
 def build_nodes(edges: DataFrame) -> DataFrame:

@@ -263,11 +263,3 @@ def build_pages_df_distributed(spark, lines: list[str], clones: int,
 
     return crossed.mapInPandas(gen, schema=PAGES_SCHEMA)
 
-
-def write_pages_parquet(spark, lines: list[str], path: str,
-                        num_partitions: int | None = None, **kwargs) -> int:
-    df = build_pages_df(spark, lines, **kwargs)
-    if num_partitions:
-        df = df.repartition(num_partitions, "url")
-    df.write.mode("overwrite").parquet(path)
-    return df.count()

@@ -22,12 +22,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
-from .canonicalize import canonical_map, dedup_edges, sameas_edges_from_map
+from .canonicalize import (_EDGE_COLS, canonical_map, dedup_edges,
+                           dedup_from_raw, with_dedup_write_cols)
 from .extract import extract_pages
 from .fsio import pjoin
 from .link import link_stage
 from .materialize import (append_lineage, build_nodes, export_ntriples_gz,
                           read_stage, stage_complete, write_stage)
+from .session import build_session
 
 
 def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
@@ -38,8 +40,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
                  repartition_by_url: int | None = None,
                  with_canonical_map: bool = True,
                  export_nt: bool = True,
-                 dedup_postwrite: bool = False,
-                 dedup_detect: str = "hashagg") -> dict:
+                 dedup_postwrite: bool = False) -> dict:
     """Returns a metrics dict (stage wall times, row counts, triples/sec).
 
     ``dedup_postwrite``: the durable path's ``linked`` checkpoint is
@@ -53,7 +54,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     resume over a ``linked`` checkpoint written WITHOUT the hash columns
     (a fused-mode run) falls back to the fused dedup and says so in
     ``metrics['stages']['canonicalize']['dedup_plan']`` — never a silent
-    re-extract, never a wrong answer."""
+    re-extract, never a wrong answer.  Without the flag the edges stage is
+    the fused :func:`olkg.canonicalize.dedup_edges`."""
     fsio.mkdirs(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
     metrics: dict = {"run_id": run_id, "stages": {}}
@@ -84,7 +86,6 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         linked = link_stage(extract_df, lcsh, hot_threshold=hot_threshold,
                             num_salts=num_salts)
         if dedup_postwrite:
-            from .canonicalize import with_dedup_write_cols
             linked = with_dedup_write_cols(linked)
         write_stage(linked, out_dir, "linked")
         wall = int((time.time() - t0) * 1000)
@@ -103,30 +104,14 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         dcleanup: list = []
         if dedup_postwrite and {"h1", "h2", "uid"} <= set(linked.columns):
             # decoupled dedup over the linked checkpoint (see docstring)
-            from .canonicalize import dedup_from_raw
-            edges = dedup_from_raw(linked, stats=dstats,
-                                   detect=dedup_detect, cleanup=dcleanup)
+            edges = dedup_from_raw(linked, stats=dstats, cleanup=dcleanup)
         else:
             if dedup_postwrite:
                 # resumed over a fused-mode linked checkpoint (no hash
                 # cols): recomputing uids across the detect/remove jobs
                 # would not be re-scan-stable, so dedup fused — on record
                 dstats["dedup_plan"] = "fused-fallback(no-hash-cols)"
-            # the linked checkpoint is already materialized, so 'auto'
-            # dedup can size itself from EXACT numbers: a metadata-only
-            # parquet count and the scan's task count
-            # (bytes / maxPartitionBytes)
-            n_linked = linked.count()
-            fs, p = fsio._hadoop_fs(spark, pjoin(out_dir, "linked"))
-            linked_bytes = fs.getContentSummary(p).getLength()
-            maxpb = _parse_size_bytes(spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"))
-            n_tasks = max(1, -(-linked_bytes // maxpb))
-            from .canonicalize import _EDGE_COLS
-            edges = dedup_edges(linked.select(*_EDGE_COLS),
-                                strategy="auto",
-                                est_total_rows=n_linked,
-                                est_rows_per_task=n_linked / n_tasks)
+            edges = dedup_edges(linked.select(*_EDGE_COLS))
         write_stage(edges, out_dir, "edges")
         for cached in dcleanup:
             cached.unpersist()
@@ -188,58 +173,6 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     return metrics
 
 
-def _parse_size_bytes(s: str) -> int:
-    """Spark size-string → bytes ('16m', '128MB', '134217728', '1g')."""
-    import re as _re
-    m = _re.match(r"^\s*(\d+)\s*([kmgt]?)b?\s*$", s.lower())
-    if not m:
-        raise ValueError(f"unparseable size: {s!r}")
-    return int(m.group(1)) * {"": 1, "k": 2**10, "m": 2**20,
-                              "g": 2**30, "t": 2**40}[m.group(2)]
-
-
-def estimate_extract_size(spark: SparkSession, pages_path: str,
-                          sample_pages: int = 256,
-                          repartition_by_url: int | None = None
-                          ) -> tuple[int, float]:
-    """(est_total_triples, est_rows_per_map_task) for the extract stream —
-    the inputs dedup_edges(strategy='auto') sizes itself from.
-
-    Cost: one metadata-only parquet count, one Hadoop-FS content summary,
-    and ~``sample_pages`` rows extracted DRIVER-side through the pure-Python
-    semantics (~milliseconds) to estimate triples/page.  Map-task count is
-    input_bytes / spark.sql.files.maxPartitionBytes — unless the stream is
-    explicitly repartitioned (``repartition_by_url``), which then fixes the
-    task count."""
-    from .pagesgen import html_to_text
-    from .triples import extract_line
-
-    pages = spark.read.parquet(pages_path)
-    n_pages = pages.count()
-    if n_pages == 0:
-        return 0, 0.0
-    cols = [c for c in ("html", "text") if c in pages.columns]
-    sample = pages.select(*cols).limit(min(sample_pages, n_pages)).collect()
-    tri = 0
-    for r in sample:
-        html = r["html"] if "html" in cols else None
-        recovered = html_to_text(bytes(html)) if html is not None else None
-        line = recovered if recovered is not None else (
-            r["text"] if "text" in cols else None)
-        res = extract_line(line) if line else None
-        tri += len(res.triples) if res else 0
-    est_total = int(n_pages * (tri / len(sample)))
-    if repartition_by_url:
-        n_tasks = repartition_by_url
-    else:
-        fs, p = fsio._hadoop_fs(spark, pages_path)
-        total_bytes = fs.getContentSummary(p).getLength()
-        maxpb = _parse_size_bytes(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"))
-        n_tasks = max(1, -(-total_bytes // maxpb))
-    return est_total, est_total / n_tasks
-
-
 def dedup_pages_df(pages: DataFrame) -> DataFrame:
     """Exact page dedup, one survivor per distinct content.
 
@@ -270,13 +203,8 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
                       repartition_by_url: int | None = None,
                       with_canonical_map: bool = True,
                       dedup_pages: bool = False,
-                      dedup_strategy: str = "auto",
-                      dedup_partitions: int | None = None,
                       dedup_postwrite: bool = False,
-                      dedup_detect: str = "hashagg",
-                      keep_raw: bool = False,
-                      est_total_rows: int | None = None,
-                      est_rows_per_task: float | None = None) -> dict:
+                      keep_raw: bool = False) -> dict:
     """Single-materialization, SINGLE-EXTRACTION variant.
 
     The expensive Python extraction UDF runs exactly once per page: the big
@@ -288,7 +216,9 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     the task.  A second, small job derives the join-born triples from the
     sink, dedups them together with the collision class, and appends — the
     two edge sets are disjoint by construction (tested), so the two local
-    dedups compose to the global A4 dedup.
+    dedups compose to the global A4 dedup.  The small join-born dedup is
+    always the fused :func:`olkg.canonicalize.dedup_edges`; the direct
+    stream's is too, unless ``dedup_postwrite``.
 
     ``run_pipeline`` is the durable, resumable path; this one is for
     throughput/scaling measurement (and for clusters where recompute beats
@@ -309,10 +239,6 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     scheduled independently (on a cluster they also overlap across jobs),
     and the round-3 scaling decomposition showed the FUSED plan's shuffle
     coupling is what capped extract-stage scaling at 2.4M pages.
-    ``dedup_strategy``/``dedup_partitions`` are ignored in this mode; no
-    driver-side sampler runs (the raw table gives exact sizes for free).
-    ``dedup_detect`` picks the duplicate-detection formulation
-    ('hashagg' default / 'window' — see olkg.canonicalize.dedup_from_raw).
 
     RETENTION CONTRACT (``keep_raw``): the default ``False`` reclaims the
     raw stage table with a DELETE-AFTER-VERIFY — the deduped edges are
@@ -322,12 +248,7 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     forensics.  At 10^12 rows the raw table roughly doubles the output
     footprint, so reclaim is the safe-at-scale default.  ``keep_raw=True``
     retains it as a recovery checkpoint / lineage anchor (debugging,
-    re-runs of downstream stages without re-extraction).
-
-    ``est_total_rows``/``est_rows_per_task``: pre-computed sampler outputs
-    for dedup_strategy='auto' (see :func:`estimate_extract_size`) — pass
-    them to skip the in-run sampler, e.g. when benchmarking repeated runs
-    over the same corpus."""
+    re-runs of downstream stages without re-extraction)."""
     from pyspark.sql import Observation
 
     from .extract import (audit_pages, extract_triples_with_side_sink,
@@ -361,7 +282,6 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
         # extraction never shares a stage with a shuffle; (b) dedup job over
         # the raw parquet — narrow hash-column shuffle + anti-join (full
         # rows move zero times on the broadcast plan)
-        from .canonicalize import dedup_from_raw, with_dedup_write_cols
         fsio.delete(spark, pjoin(out_dir, "edges_raw"))
         write_stage(with_dedup_write_cols(stream), out_dir, "edges_raw")
         t1 = time.time()
@@ -372,7 +292,7 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
         obs_direct = Observation("direct_edges")
         direct_edges = dedup_from_raw(
             read_stage(spark, out_dir, "edges_raw"), stats=dstats,
-            detect=dedup_detect, cleanup=dcleanup).observe(
+            cleanup=dcleanup).observe(
             obs_direct, F.count(F.lit(1)).alias("n"))
         write_stage(direct_edges, out_dir, "edges/d=0")
         for cached in dcleanup:       # detect intermediates are consumed now
@@ -400,25 +320,8 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
         dd_metrics["wall_ms"] = int((time.time() - t1) * 1000)
         metrics["stages"]["dedup_direct"] = dd_metrics
     else:
-        est_total, est_per_task = est_total_rows, est_rows_per_task
-        if dedup_strategy == "auto" and est_per_task is None:
-            # cheap sampler (driver-side, milliseconds): sizes the dedup
-            # plan — map-side partial agg below ~1.5M rows/map task,
-            # explicit prepartition + complete agg above (3x measured,
-            # BENCH/BASELINE.md)
-            est_total, est_per_task = estimate_extract_size(
-                spark, pages_path, repartition_by_url=repartition_by_url)
-        if dedup_strategy == "auto":
-            from .canonicalize import plan_dedup
-            metrics["stages"]["dedup_plan"] = {
-                "est_total_rows": est_total,
-                "est_rows_per_task": int(est_per_task),
-                "chosen": plan_dedup(est_total, est_per_task)[0]}
         obs_direct = Observation("direct_edges")
-        direct_edges = dedup_edges(stream, strategy=dedup_strategy,
-                                   num_partitions=dedup_partitions,
-                                   est_total_rows=est_total,
-                                   est_rows_per_task=est_per_task).observe(
+        direct_edges = dedup_edges(stream).observe(
             obs_direct, F.count(F.lit(1)).alias("n"))
         write_stage(direct_edges, out_dir, "edges/d=0")
         n_direct = obs_direct.get["n"]
@@ -564,16 +467,6 @@ def main(argv=None):
     ap.add_argument("--dedup-pages", action="store_true",
                     help="exact-dedup pages by content hash before extract "
                          "(fast mode only)")
-    ap.add_argument("--dedup-strategy", default="auto",
-                    choices=["auto", "partial", "prepartition"],
-                    help="edge dedup: 'auto' (default) sizes the plan from "
-                         "a cheap sample — partial agg for small per-task "
-                         "row counts, prepartition+complete agg beyond "
-                         "~1.5M rows/map task (3x measured; see "
-                         "olkg.canonicalize.dedup_edges)")
-    ap.add_argument("--dedup-partitions", type=int, default=None,
-                    help="partition count for --dedup-strategy prepartition "
-                         "(size to ~1M rows each)")
     ap.add_argument("--dedup-postwrite", action="store_true",
                     help="decouple dedup from the big stream: fast mode "
                          "writes the extract stream raw (pure narrow map) "
@@ -581,11 +474,6 @@ def main(argv=None):
                          "annotates the linked checkpoint and dedups from "
                          "it — either way only 24-byte hash rows shuffle "
                          "(olkg.canonicalize.dedup_from_raw)")
-    ap.add_argument("--dedup-detect", default="hashagg",
-                    choices=["hashagg", "window"],
-                    help="duplicate-detect formulation for "
-                         "--dedup-postwrite: 'hashagg' (sort-free complete "
-                         "aggregate, default) or 'window' (sort-based)")
     ap.add_argument("--keep-raw", action="store_true",
                     help="retain the edges_raw stage table as a recovery "
                          "checkpoint after the decoupled dedup (default: "
@@ -593,21 +481,7 @@ def main(argv=None):
                          "raw == kept + dropped gates the reclaim; at "
                          "scale the raw table doubles the output "
                          "footprint)")
-    ap.add_argument("--no-keep-raw", action="store_true",
-                    help="deprecated no-op: raw reclaim is the default "
-                         "(see --keep-raw)")
     args = ap.parse_args(argv)
-    if args.no_keep_raw:
-        # the round-6 default flip made this a no-op; warn so invocations
-        # that relied on it noticing the retention default changed
-        import warnings
-        warnings.warn(
-            "--no-keep-raw is deprecated and a no-op: raw-table reclaim "
-            "(delete-after-verify) has been the DEFAULT since the round-6 "
-            "retention-contract change; pass --keep-raw to retain "
-            "edges_raw as a recovery checkpoint", UserWarning)
-
-    from .session import build_session
     spark = build_session(app_name="olkg-pipeline", master=args.master,
                           shuffle_partitions=args.shuffle_partitions)
     lcsh = None
@@ -622,10 +496,7 @@ def main(argv=None):
                                     num_salts=args.num_salts,
                                     repartition_by_url=args.repartition_by_url,
                                     dedup_pages=args.dedup_pages,
-                                    dedup_strategy=args.dedup_strategy,
-                                    dedup_partitions=args.dedup_partitions,
                                     dedup_postwrite=args.dedup_postwrite,
-                                    dedup_detect=args.dedup_detect,
                                     keep_raw=args.keep_raw)
     else:
         metrics = run_pipeline(spark, args.pages, args.out, lcsh=lcsh,
@@ -633,8 +504,7 @@ def main(argv=None):
                                hot_threshold=args.hot_threshold,
                                num_salts=args.num_salts,
                                repartition_by_url=args.repartition_by_url,
-                               dedup_postwrite=args.dedup_postwrite,
-                               dedup_detect=args.dedup_detect)
+                               dedup_postwrite=args.dedup_postwrite)
     print(json.dumps(metrics))
     spark.stop()
 

@@ -75,7 +75,6 @@ def generate_corpus(clones: int, path: str,
 
 
 def run_at(cores: int, pages_path: str, dedup_mode: str = "fused",
-           dedup_detect: str = "hashagg",
            scratch_root: str | None = None) -> dict:
     out = tempfile.mkdtemp(prefix=f"olkg_scale_{cores}_", dir=scratch_root)
     # fixed moderate heap at every level: on this VM, JVM heaps ≥32g degrade
@@ -101,7 +100,7 @@ def run_at(cores: int, pages_path: str, dedup_mode: str = "fused",
     if dedup_mode == "postwrite":
         # delete-after-verify raw reclaim is the pipeline default now; the
         # scratch footprint stays ~1x the output with the census asserted
-        cmd += ["--dedup-postwrite", "--dedup-detect", dedup_detect]
+        cmd += ["--dedup-postwrite"]
     t0 = time.time()
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env,
                           cwd=REPO)
@@ -129,9 +128,6 @@ def main():
                          "the legacy one-clique-per-entity corpus")
     ap.add_argument("--out-json", default="scaling.json",
                     help="artifact filename under BENCH/")
-    ap.add_argument("--dedup-detect", default="hashagg",
-                    choices=["hashagg", "window"],
-                    help="detect formulation for --dedup-mode postwrite")
     ap.add_argument("--dedup-mode", default="fused",
                     choices=["fused", "postwrite"],
                     help="'postwrite' decouples dedup from the extract "
@@ -181,7 +177,6 @@ def main():
             "clones": args.clones,
             "cluster_size": cs,
             "dedup_mode": args.dedup_mode,
-            "dedup_detect": args.dedup_detect,
             "storage": args.storage,
             "parquet_codec": os.environ.get("OLKG_PARQUET_CODEC", "snappy"),
             "pages": any_t.get("pages"),
@@ -200,7 +195,6 @@ def main():
             print(f"trial {i + 1}/{args.trials}: local[{cores}] ...",
                   flush=True)
             m = run_at(cores, pages_path, dedup_mode=args.dedup_mode,
-                       dedup_detect=args.dedup_detect,
                        scratch_root=scratch_root)
             rec = {"wall_s": m["wall_s"], "triples": m["triples"],
                    "pages": m["pages"],

@@ -368,26 +368,6 @@ def test_ntriples_dated_single_file(spark, pipeline_out, tmp_path):
     assert n == edges.count()
 
 
-def test_fast_pipeline_prepartition_dedup(spark, corpus, tmp_path_factory):
-    """dedup_strategy='prepartition' (the >2M-rows-per-task scale path)
-    produces the identical golden edge set."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_prepart_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_pp")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False,
-                                dedup_strategy="prepartition",
-                                dedup_partitions=8)
-    result = edges_set(spark, out)
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0
-    assert metrics["triples"] == len(golden)
-
-
 def test_dedup_pages_preserves_distinct_content_per_url(spark):
     """One url carrying two DIFFERENT texts must keep both contents (the
     url-round-trip design lost one of them); null-text pages never collapse
@@ -407,57 +387,11 @@ def test_dedup_pages_preserves_distinct_content_per_url(spark):
                            ("http://c", None), ("http://d", None)]
 
 
-def test_plan_dedup_sizing_rule():
-    """'auto' flips to prepartition past the measured per-task threshold and
-    sizes reduce partitions to ~1M rows; stays partial below it."""
-    from olkg.canonicalize import plan_dedup
-    # 57M rows over 16 map tasks (the measured 2.4M-page shape) → prepartition
-    strat, n = plan_dedup(57_000_000, 57_000_000 / 16)
-    assert strat == "prepartition" and n == 57
-    # bench-gate shape: 29M rows over ~175 scan tasks → partial
-    strat, n = plan_dedup(29_000_000, 29_000_000 / 175)
-    assert strat == "partial" and n is None
-    # tiny corpus → partial
-    assert plan_dedup(800, 800 / 4)[0] == "partial"
-
-
-def test_estimate_extract_size_sampler(spark, corpus, tmp_path_factory):
-    """The sampler's triples/page estimate lands near the true value and
-    honors an explicit repartition count for the task denominator."""
-    from olkg.golden import golden_triples
-    from olkg.pipeline import estimate_extract_size
-    pages_path = str(tmp_path_factory.mktemp("pages_est")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    est_total, per_task = estimate_extract_size(spark, pages_path,
-                                                repartition_by_url=4)
-    # sample covers the whole tiny corpus → estimate ≈ raw triple count
-    # (golden is deduped + join-augmented, so just sanity-bound it)
-    assert est_total > len(golden_triples(corpus, {})) * 0.5
-    assert per_task == pytest.approx(est_total / 4)
-
-
-def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory):
-    """dedup_strategy='auto' (the default) still reproduces golden."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_auto_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_auto")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False,
-                                dedup_strategy="auto")
-    result = edges_set(spark, out)
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0
-    assert metrics["stages"]["dedup_plan"]["chosen"] == "partial"
-
-
 def test_dedup_from_raw_exact_and_plans(spark):
-    """dedup_from_raw equals dropDuplicates on both plans (broadcast drop
-    set and shuffled anti-join), and its DETECT pass scans only the three
-    long columns (columnar pruning — no string decode in the narrow pass)."""
+    """dedup_from_raw equals dropDuplicates on both plans (broadcast and
+    shuffled join-back of the dup-group table), and its DETECT pass scans
+    only the three long columns (columnar pruning — no string decode in the
+    narrow pass)."""
     from olkg.canonicalize import dedup_from_raw, with_dedup_write_cols
     rows = ([("s%d" % i, "p", "o%d" % (i % 7), "uri", None)
              for i in range(40)]        # 7 distinct (s varies → 40 distinct)
@@ -468,33 +402,27 @@ def test_dedup_from_raw_exact_and_plans(spark):
     raw = with_dedup_write_cols(stream)
     want = set(map(tuple, stream.dropDuplicates().collect()))
 
-    for detect, bc_plan, sh_plan in (
-            ("hashagg", "hashagg-broadcast", "hashagg-shuffle"),
-            ("window", "hashdrop-broadcast", "hashdrop-shuffle")):
-        for max_bc in (1 << 30, 0):      # broadcast plan, then shuffle plan
-            stats, cleanup = {}, []
-            got = dedup_from_raw(raw, max_broadcast_drops=max_bc,
-                                 stats=stats, detect=detect, cleanup=cleanup)
-            got_set = list(map(tuple, got.collect()))
-            assert len(got_set) == len(want) and set(got_set) == want
-            assert stats["n_dropped_dups"] == 5 + 2
-            assert stats["dedup_plan"] == (bc_plan if max_bc else sh_plan)
-            if detect == "hashagg":
-                assert stats["n_dup_groups"] == 2
-            assert len(cleanup) == 1     # the detect intermediate, on record
-            for cached in cleanup:
-                cached.unpersist()
+    for max_bc in (1 << 30, 0):          # broadcast plan, then shuffle plan
+        stats, cleanup = {}, []
+        got = dedup_from_raw(raw, max_broadcast_drops=max_bc,
+                             stats=stats, cleanup=cleanup)
+        got_set = list(map(tuple, got.collect()))
+        assert len(got_set) == len(want) and set(got_set) == want
+        assert stats["n_dropped_dups"] == 5 + 2
+        assert stats["n_dup_groups"] == 2
+        assert stats["dedup_plan"] == ("hashagg-broadcast" if max_bc
+                                       else "hashagg-shuffle")
+        assert len(cleanup) == 1         # the detect intermediate, on record
+        for cached in cleanup:
+            cached.unpersist()
 
     # columnar pruning evidence on a real parquet-backed raw table
     import contextlib, io, tempfile
     path = tempfile.mkdtemp(prefix="olkg_raw_prune_") + "/raw.parquet"
     raw.write.mode("overwrite").parquet(path)
     raw_pq = spark.read.parquet(path)
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("h1", "h2")
-    narrow = (raw_pq.select("h1", "h2", "uid")
-              .withColumn("_keep", F.min("uid").over(w)))
+    narrow = (raw_pq.select("h1", "h2", "uid").repartition("h1", "h2")
+              .groupBy("h1", "h2").agg(F.min("uid").alias("_keep")))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         narrow.explain(mode="formatted")

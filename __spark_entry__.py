@@ -30,21 +30,35 @@ CENTROIDS = os.path.join(REPO, "data", "ivf_centroids.parquet")
 _CACHE: dict = {}
 
 
-def _kg(spark: SparkSession):
-    """Run extract→link→dedup once per session; cache the small results."""
+def _cache_put(spark: SparkSession, key: tuple, value) -> None:
+    """Insert into the session cache, first evicting every entry of another
+    application: a stopped session's handles (persisted DataFrames bound to
+    a dead context) would otherwise accumulate for the driver's lifetime."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _CACHE if k[1] != app]:
+        del _CACHE[stale]
+    _CACHE[key] = value
+
+
+def _kg(spark: SparkSession) -> DataFrame:
+    """The deduplicated edges of the committed pages, built once per session
+    from the pipeline's own stage functions: dedup(direct) ∪ dedup(linked)."""
     key = ("kg", spark.sparkContext.applicationId)
     if key not in _CACHE:
         from olkg.canonicalize import dedup_edges
         from olkg.extract import extract_pages
-        from olkg.link import link_stage
+        from olkg.link import linked_triples
 
         pages = spark.read.parquet(PAGES)
         lcsh = spark.read.parquet(LCSH)
         ext = extract_pages(pages).cache()
-        edges = dedup_edges(link_stage(ext, lcsh, hot_threshold=1000,
-                                       num_salts=4)).cache()
+        direct = (ext.filter(F.col("kind") == "triple")
+                  .select("subj", "pred", "obj", "obj_kind", "obj_datatype"))
+        linked = linked_triples(ext, lcsh, hot_threshold=1000, num_salts=4)
+        edges = dedup_edges(direct).unionByName(dedup_edges(linked)).cache()
         edges.count()
-        _CACHE[key] = (ext, edges)
+        ext.unpersist()
+        _cache_put(spark, key, edges)
     return _CACHE[key]
 
 
@@ -57,7 +71,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG construction (extract→link→canonicalize) triple
     census by predicate, plus an sf0.001 corpus stat row."""
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     pred_counts = (edges.groupBy("pred")
                    .agg(F.count(F.lit(1)).alias("n"))
                    .select(F.col("pred").alias("name"), "n"))
@@ -72,18 +86,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_kg_edges(spark, sf_dir):
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return edges.select("subj", "pred", "obj", "obj_kind", "obj_datatype")
 
 
 def q_kg_pred_counts(spark, sf_dir):
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return edges.groupBy("pred").agg(F.count(F.lit(1)).alias("n"))
 
 
 def q_kg_typed_nodes(spark, sf_dir):
     from olkg import vocab as V
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return (edges.filter(F.col("pred") == V.RDF_TYPE)
             .groupBy(F.col("subj").alias("id"))
             .agg(F.min("obj").alias("node_type")))
@@ -91,7 +105,7 @@ def q_kg_typed_nodes(spark, sf_dir):
 
 def q_kg_author_links(spark, sf_dir):
     from olkg import vocab as V
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return (edges.filter(F.col("pred") == V.OL_AUTHOR)
             .select(F.col("subj").alias("creation_uri"),
                     F.col("obj").alias("author_name")).distinct())
@@ -99,7 +113,7 @@ def q_kg_author_links(spark, sf_dir):
 
 def q_kg_lcsh_subjects(spark, sf_dir):
     from olkg import vocab as V
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return (edges.filter((F.col("pred") == V.DC_SUBJECT)
                          & F.col("obj").startswith("http://id.loc.gov/"))
             .select(F.col("subj").alias("entity"),
@@ -108,13 +122,13 @@ def q_kg_lcsh_subjects(spark, sf_dir):
 
 def q_kg_blocking_keys(spark, sf_dir):
     from olkg.canonicalize import blocking_keys
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return blocking_keys(edges).distinct()
 
 
 def q_kg_works_bidirectional(spark, sf_dir):
     from olkg import vocab as V
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return (edges.filter(F.col("pred").isin(V.DC_IS_VERSION_OF,
                                             V.DC_HAS_VERSION))
             .select("subj", "pred", "obj"))
@@ -122,17 +136,15 @@ def q_kg_works_bidirectional(spark, sf_dir):
 
 def q_kg_datetime_literals(spark, sf_dir):
     from olkg import vocab as V
-    _, edges = _kg(spark)
+    edges = _kg(spark)
     return (edges.filter(F.col("obj_datatype") == V.XSD_DATETIME)
             .select("subj", "pred", "obj"))
 
 
 def q_kg_text_identity(spark, sf_dir):
-    ext, _ = _kg(spark)
-    return (ext.filter(F.col("kind") == "page")
-            .agg(F.count(F.lit(1)).alias("pages"),
-                 F.sum(F.when(F.col("obj") == "ok", 1).otherwise(0))
-                 .alias("pages_ok")))
+    from olkg.extract import audit_pages
+    return audit_pages(spark.read.parquet(PAGES)).select(
+        "pages", (F.col("pages") - F.col("mismatches")).alias("pages_ok"))
 
 
 # ---------------------------------------------------------------------------
@@ -236,7 +248,7 @@ def _ivf_handles(spark, path: str):
         ids.count()
         cents = spark.read.parquet(CENTROIDS).persist()
         cents.count()
-        _CACHE[key] = (corpus, ids, cents)
+        _cache_put(spark, key, (corpus, ids, cents))
     return _CACHE[key]
 
 

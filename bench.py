@@ -84,7 +84,7 @@ def main() -> None:
     # --- headline: end-to-end KG pipeline ---------------------------------
     pages_path = ensure_bench_pages(spark, sf)
     out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_")
-    from olkg.pipeline import run_pipeline, run_pipeline_fast
+    from olkg.pipeline import run_pipeline
     lcsh = spark.read.parquet(os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "data", "lcsh.parquet"))
     # untimed warmup: JIT the extraction path and spin up the Python workers
@@ -111,9 +111,10 @@ def main() -> None:
     for _ in range(n_trials):
         out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_")
         t0 = time.time()
-        m = run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
-                              hot_threshold=50_000, num_salts=16,
-                              with_canonical_map=True)
+        m = run_pipeline(spark, pages_path, out_dir, lcsh=lcsh,
+                         durable=False, export_nt=False,
+                         hot_threshold=50_000, num_salts=16,
+                         with_canonical_map=True)
         trials["kg_pipeline"].append(round(time.time() - t0, 3))
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -122,9 +123,10 @@ def main() -> None:
         # is on record round over round
         out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_p_")
         t0 = time.time()
-        run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
-                          hot_threshold=50_000, num_salts=16,
-                          with_canonical_map=True, dedup_postwrite=True)
+        run_pipeline(spark, pages_path, out_dir, lcsh=lcsh,
+                     durable=False, export_nt=False,
+                     hot_threshold=50_000, num_salts=16,
+                     with_canonical_map=True, dedup_postwrite=True)
         trials["kg_pipeline_postwrite"].append(round(time.time() - t0, 3))
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -63,10 +63,9 @@ def with_dedup_write_cols(stream: DataFrame) -> DataFrame:
         F.monotonically_increasing_id().alias("uid"))
 
 
-def dedup_from_raw(raw: DataFrame,
+def dedup_from_raw(raw: DataFrame, *, cleanup: list,
                    max_broadcast_drops: int = 20_000_000,
-                   stats: dict | None = None,
-                   cleanup: list | None = None) -> DataFrame:
+                   stats: dict | None = None) -> DataFrame:
     """A4 dedup as a SEPARATE job over a materialized raw edge table (written
     with :func:`with_dedup_write_cols` columns) — the decoupled alternative to
     deduplicating inline in the extraction stage.
@@ -101,24 +100,10 @@ def dedup_from_raw(raw: DataFrame,
     as duplicates require an (h1, h2) double collision, P ≈ n²/2¹²⁹
     (~1e-15 at 10¹² rows).  ``stats`` (optional dict) records the drop
     count and the chosen plan — no silent behavior switches.  ``cleanup``
-    (a list, effectively REQUIRED): the detect intermediate is persisted
-    and appended here for the caller to unpersist once the output is
-    materialized (it must outlive the returned plan's execution, so this
-    function cannot unpersist it itself).  Omitting ``cleanup`` leaks that
-    executor cache for the app lifetime — a ResourceWarning says so rather
-    than leaking silently."""
-    if cleanup is None:
-        # UserWarning + a WARNING-level log line: ResourceWarning is hidden
-        # by default Python filters, which made the documented "fail loudly
-        # instead of leaking silently" contract effectively silent
-        import logging
-        import warnings
-        msg = ("dedup_from_raw: no `cleanup` list passed — the persisted "
-               "detect intermediate cannot be unpersisted by the caller and "
-               "leaks for the app lifetime; pass cleanup=[] and unpersist "
-               "its entries after materializing the output")
-        warnings.warn(msg, UserWarning, stacklevel=2)
-        logging.getLogger(__name__).warning(msg)
+    (a list): the detect intermediate is persisted and appended here for
+    the caller to unpersist once the output is materialized (it must
+    outlive the returned plan's execution, so this function cannot
+    unpersist it itself)."""
     groups = (raw.select("h1", "h2", "uid")
               .repartition("h1", "h2")
               .groupBy("h1", "h2")
@@ -126,8 +111,7 @@ def dedup_from_raw(raw: DataFrame,
                    F.count(F.lit(1)).alias("_n"))
               .filter(F.col("_n") > 1)
               .persist())
-    if cleanup is not None:
-        cleanup.append(groups)
+    cleanup.append(groups)
     census = groups.agg(
         F.count(F.lit(1)).alias("g"),
         F.sum(F.col("_n") - F.lit(1)).alias("d")).first()
@@ -149,7 +133,9 @@ def dedup_from_raw(raw: DataFrame,
     return out
 
 
-_ID_PREDS = {
+# identifier predicate → blocking-key prefix (the extract kernel emits the
+# same 'prefix:value' keys as kind='block_id' rows)
+BLOCK_ID_PREDS = {
     V.BIBO_ISBN13: "isbn13",
     V.BIBO_LCCN: "lccn",
     V.BIBO_OCLCNUM: "oclc",
@@ -158,14 +144,17 @@ _ID_PREDS = {
 
 def blocking_keys(edges: DataFrame, author_names: DataFrame | None = None,
                   minhash_bands: int = 4, band_rows: int = 2) -> DataFrame:
-    """(entity, block_key) pairs.
+    """(entity, block_key) pairs re-derived from an edge table — the
+    reference definition of the blocking keys (:func:`canonical_map` takes
+    the extract stage's ``block_id`` copies of the same keys instead).
 
     Identifier keys come straight off the deduped edge table (already
     normalized by the extract semantics: ISBN cleanup/convert, LCCN strip,
     OCLC digits-only).  Author fuzzy keys are MinHash band signatures over
     character 3-grams of each name (vectorized, see _minhash_band_udf)."""
-    pred_map = F.create_map(*[F.lit(x) for kv in _ID_PREDS.items() for x in kv])
-    ids = (edges.filter(F.col("pred").isin(list(_ID_PREDS)))
+    pred_map = F.create_map(*[F.lit(x) for kv in BLOCK_ID_PREDS.items()
+                              for x in kv])
+    ids = (edges.filter(F.col("pred").isin(list(BLOCK_ID_PREDS)))
            .select(F.col("subj").alias("entity"),
                    F.concat_ws(":", pred_map[F.col("pred")],
                                F.col("obj")).alias("block_key")))
@@ -175,8 +164,8 @@ def blocking_keys(edges: DataFrame, author_names: DataFrame | None = None,
     return ids.unionByName(bands)
 
 
-def _author_name_bands(author_names: DataFrame, num_bands: int,
-                       band_rows: int) -> DataFrame:
+def _author_name_bands(author_names: DataFrame, num_bands: int = 4,
+                       band_rows: int = 2) -> DataFrame:
     """MinHash-LSH band keys for author names, entirely in native
     expressions (JVM-side, codegen): casefold+strip → char-3-gram array →
     per-permutation min of xxhash64(perm|gram) → per-band signature hash.
@@ -477,42 +466,27 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     return out
 
 
-def canonical_map_from_blocks(block_ids: DataFrame,
-                              author_names: DataFrame | None = None,
-                              reliable_dir: str | None = None,
-                              minhash_bands: int = 4,
-                              band_rows: int = 2,
-                              max_block_df: int | None = 100_000,
-                              dropped_stats: dict | None = None,
-                              cc_stats: dict | None = None) -> DataFrame:
-    """canonical_map from pre-extracted (entity, block_key) rows — the fast
-    path feeds the extract stage's sink copy of the identifier triples here,
-    so entity resolution never re-scans the full edge table (and can run
-    concurrently with the link stage, which only appends join-born
-    predicates that are never blocking keys)."""
-    pairs = block_ids.select("entity", "block_key")
-    if author_names is not None:
-        pairs = pairs.unionByName(
-            _author_name_bands(author_names, minhash_bands, band_rows))
-    return connected_components(pairs, reliable_dir=reliable_dir,
-                                max_block_df=max_block_df,
-                                dropped_stats=dropped_stats,
-                                cc_stats=cc_stats)
-
-
-def canonical_map(edges: DataFrame, author_names: DataFrame | None = None,
+def canonical_map(block_ids: DataFrame,
+                  author_names: DataFrame | None = None,
                   reliable_dir: str | None = None,
                   max_block_df: int | None = 100_000,
                   dropped_stats: dict | None = None,
                   cc_stats: dict | None = None) -> DataFrame:
     """(entity, canonical_id) for all entities resolvable via blocking keys;
     entities not in any block are their own canonical id (left out of the map
-    — consumers treat absence as identity).  ``reliable_dir``: durable CC
-    checkpoint location (cluster-side distributed storage) for the resumable
-    path."""
-    return connected_components(blocking_keys(edges, author_names),
-                                reliable_dir=reliable_dir,
+    — consumers treat absence as identity).
+
+    ``block_ids``: (entity, block_key) identifier keys — the extract
+    stage's ``block_id`` rows, so entity resolution never re-scans the full
+    edge table (and can run concurrently with the link stage, which only
+    adds join-born predicates that are never blocking keys).
+    ``author_names``: (author_key, name) rows for the MinHash name bands.
+    ``reliable_dir``: durable CC checkpoint location (cluster-side
+    distributed storage) for the durable policy."""
+    pairs = block_ids.select("entity", "block_key")
+    if author_names is not None:
+        pairs = pairs.unionByName(_author_name_bands(author_names))
+    return connected_components(pairs, reliable_dir=reliable_dir,
                                 max_block_df=max_block_df,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)
-

@@ -7,26 +7,29 @@ as Arrow RecordBatches and rows stream out columnar, so Python is amortized
 per batch, never per Spark row (the analog of the reference's 1001-record
 queue, openlibrary_to_rdf.rb:35-45, minus its tail-drop bug).
 
+One kernel (:func:`_extract_lines`) serves both checkpoint policies of
+:func:`olkg.pipeline.run_pipeline`; they differ only in where its rows land
+(:func:`extract_pages`): the durable policy streams every kind out to the
+``extract/`` checkpoint, the fast policy streams only the direct triples
+into the dedup shuffle and writes the small side rows to a parquet side
+sink from inside the task.
+
 Scale notes (100 TB posture):
 - narrow stage: no shuffle; parallelism = input splits.  Optional
   ``repartition_by_url`` forces an xxhash64(url) redistribution when the
   input's own partitioning is skewed (north_rule's url-hash repartition).
-- column pruning: only (url, html, text) are read — Catalyst prunes the rest
-  from the parquet/Iceberg scan.
-- the html→text inversion is audited per page ('page' rows), enforcing the
-  byte-identity invariant without a second pass.
-- single-pass mode (:func:`extract_triples_with_side_sink`): the UDF yields
-  the big triple stream straight into the downstream shuffle and writes the
-  small side rows (author names, creation refs, LCSH probes, page audits —
-  a few rows per page) to a parquet side sink from inside the task, so the
-  expensive Python extraction runs EXACTLY ONCE per page and the large
-  intermediate is never materialized.  On a cluster the sink path must be
-  shared storage — the sink is written through ``pyarrow.fs`` resolved from
-  the URI in-task (hdfs://, s3a://→s3://, file://; see olkg.fsio), and the
-  driver cross-checks an executor-side row census against sink visibility,
-  failing loudly on a non-shared sink.  Task retries can duplicate sink files;
-  every consumer is duplicate-tolerant (names/refs/probes feed joins whose
-  outputs pass one dropDuplicates; page audits aggregate per distinct url).
+- the html→text inversion runs JVM-side (:func:`pages_to_lines`), so Python
+  receives one string per page and never sees html bytes; the byte-identity
+  audit is a separate native aggregate (:func:`audit_pages`).
+- side sink: the expensive Python extraction runs EXACTLY ONCE per page and
+  the large intermediate is never materialized.  On a cluster the sink path
+  must be shared storage — the sink is written through ``pyarrow.fs``
+  resolved from the URI in-task (hdfs://, s3a://→s3://, file://; see
+  olkg.fsio), and the driver cross-checks an executor-side row census
+  against sink visibility, failing loudly on a non-shared sink.  Task
+  retries can duplicate sink files; every consumer is duplicate-tolerant
+  (names/refs/probes/block ids feed joins or blocking whose outputs are
+  deduplicated; collision triples pass the linked dedup).
 """
 
 from __future__ import annotations
@@ -39,29 +42,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
-from .pagesgen import html_to_text
+from .canonicalize import BLOCK_ID_PREDS
 from .schema import EXTRACT_SCHEMA, TRIPLES_SCHEMA
 from .triples import extract_record, parse_dump_line
 
-_COLS = ["kind", "src_type", "url", "subj", "pred", "obj", "obj_kind",
-         "obj_datatype"]
-_TRIPLE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
+_EDGE_COLS = TRIPLES_SCHEMA.names
+_COLS = EXTRACT_SCHEMA.names
 
 # Triples whose predicate can ALSO be produced by the link stage's joins
 # (J1 emits ol:author from the author↔creation rendezvous; editions with a
 # role=="Author" contributor emit ol:author directly, lib/edition.rb:229-236;
 # J2 emits dc:subject URIs, and classifications/dict-subjects emit dc:subject
-# URIs directly).  In single-pass mode these are routed through the side sink
-# so the directly-written edge set and the join-born edge set stay provably
-# disjoint — global dedup then decomposes into two independent dedups.
+# URIs directly).  They are emitted as kind='collision' and deduplicated
+# together with the join outputs, so the direct edge set (kind='triple') and
+# the linked edge set stay provably disjoint — global dedup then decomposes
+# into two independent dedups.
 _DC_SUBJECT = V.DC_SUBJECT
 _OL_AUTHOR = V.OL_AUTHOR
-
-# identifier predicates double as entity-resolution blocking keys; the sink
-# carries a copy (kind='block_id') so the canonicalize stage never re-scans
-# the full edge table for them (duplicates are harmless — blocking dedups)
-_BLOCK_PREDS = {V.BIBO_ISBN13: "isbn13", V.BIBO_LCCN: "lccn",
-                V.BIBO_OCLCNUM: "oclc"}
 
 
 def _is_collision_triple(pred: str, obj_kind: str) -> bool:
@@ -90,66 +87,112 @@ class _Cols:
         self.cols = [[] for _ in self.names]
 
 
-def _make_extract_batches(triples: bool = True, sides: bool = True):
-    """Batch iterator emitting the unified 8-column extract rows (durable
-    path; also the two-pass fast path's building block)."""
+def _extract_lines(lines, triples: _Cols, side: _Cols) -> None:
+    """The extraction kernel: parse each dump line and append its rows —
+    direct triples to ``triples`` (5 edge columns), every other kind to
+    ``side`` (kind + 5 edge columns).  Lines the semantics skip (None,
+    malformed, unknown type) append nothing."""
+    for line in lines:
+        rec = parse_dump_line(line) if line is not None else None
+        if rec is None:
+            continue
+        res = extract_record(rec[0], rec[4])
+        if res is None:
+            continue
+        for t in res.triples:
+            if _is_collision_triple(t.pred, t.obj_kind):
+                side.append("collision", t.subj, t.pred, t.obj, t.obj_kind,
+                            t.obj_datatype)
+                continue
+            # identifier predicates double as entity-resolution blocking
+            # keys: a 'block_id' copy spares the canonical map a re-scan of
+            # the full edge table (duplicates are harmless — blocking dedups)
+            if t.pred in BLOCK_ID_PREDS:
+                side.append("block_id", t.subj, None,
+                            BLOCK_ID_PREDS[t.pred] + ":" + t.obj, None, None)
+            triples.append(t.subj, t.pred, t.obj, t.obj_kind, t.obj_datatype)
+        for key, name in res.author_names:
+            side.append("author_name", key, None, name, None, None)
+        for creation, key in res.creation_refs:
+            side.append("creation_ref", creation, None, key, None, None)
+        for uri, label in res.probes:
+            side.append("probe", uri, None, label, None, None)
 
-    def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _make_extract_batches(side_sink: str | None = None, side_count_acc=None):
+    """Batch iterator over (line) rows around :func:`_extract_lines`.
+
+    Without ``side_sink`` every row streams out as EXTRACT_SCHEMA rows (the
+    durable policy writes them all to ``extract/``).  With it only the
+    direct triples stream out (TRIPLES_SCHEMA); every other kind accumulates
+    across the task's batches and is written once per task to
+    ``side_sink``.  The sink path may be a URI (``hdfs://``, ``s3a://``,
+    ``file://``) or a plain path: it is resolved IN-TASK via
+    :func:`olkg.fsio.pa_fs` (pyarrow), so executors write straight to
+    shared storage — the cluster precondition for the fast policy.
+    ``side_count_acc`` (a Spark accumulator) censuses written side rows so
+    the driver can detect a sink the executors wrote but it cannot see (see
+    :func:`read_side_rows`)."""
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        side = _Cols(_COLS)
         for pdf in batches:
-            out = _Cols(_COLS)
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist() if "html" in pdf else [None] * len(urls)
-            texts = pdf["text"].tolist()
-            for url, html, text in zip(urls, htmls, texts):
-                recovered = html_to_text(bytes(html)) if html is not None else None
-                line = recovered if recovered is not None else text
-                rec = parse_dump_line(line) if line is not None else None
-                src_type = rec[0] if rec else None
-                if sides:
-                    out.append("page", src_type, url, url, None,
-                               "ok" if recovered == text else "mismatch",
-                               None, None)
-                if rec is None:
-                    continue
-                res = extract_record(rec[0], rec[4])
-                if res is None:
-                    continue
-                if triples:
-                    for t in res.triples:
-                        out.append("triple", src_type, url, t.subj, t.pred,
-                                   t.obj, t.obj_kind, t.obj_datatype)
-                if sides:
-                    for key, name in res.author_names:
-                        out.append("author_name", src_type, url, key, None,
-                                   name, None, None)
-                    for creation, key in res.creation_refs:
-                        out.append("creation_ref", src_type, url, creation,
-                                   None, key, None, None)
-                    for uri, label in res.probes:
-                        out.append("probe", src_type, url, uri, None, label,
-                                   None, None)
-            yield out.frame()
+            triples = _Cols(_EDGE_COLS)
+            _extract_lines(pdf["line"].tolist(), triples, side)
+            out = triples.frame()
+            if side_sink is None:
+                out.insert(0, "kind", "triple")
+                if len(side):
+                    yield side.frame()
+                    side.reset()
+            yield out
 
-    return _extract_batches
+        if side_sink is not None and len(side):
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            from .fsio import pa_fs, pjoin
+
+            tbl = pa.table(
+                {n: pa.array(c, type=pa.string())
+                 for n, c in zip(side.names, side.cols)})
+            fs, sink_path = pa_fs(side_sink)
+            fs.create_dir(sink_path, recursive=True)
+            pq.write_table(
+                tbl, pjoin(sink_path, f"part-{uuid.uuid4().hex}.parquet"),
+                filesystem=fs, compression="zstd")
+            if side_count_acc is not None:
+                side_count_acc.add(len(side))
+
+    return _batches
 
 
 def extract_pages(pages: DataFrame, repartition_by_url: int | None = None,
-                  triples: bool = True, sides: bool = True) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → unified extract rows
-    (durable-pipeline path; the checkpoint write materializes every kind
-    once, so downstream readers never re-run the UDF)."""
-    cols = [c for c in ("url", "html", "text") if c in pages.columns]
-    src = pages.select(*cols)
+                  side_sink: str | None = None,
+                  side_count_acc=None) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → extract rows, one Python pass
+    per page over the JVM-side dump lines (:func:`pages_to_lines`).
+
+    Without ``side_sink``: every kind, EXTRACT_SCHEMA (the durable policy
+    materializes them all once, so downstream readers never re-run the
+    UDF).  With ``side_sink``: only the direct triples, TRIPLES_SCHEMA; the
+    other kinds land in the sink when the returned stream is executed, so
+    the caller MUST run an action on it before reading the sink with
+    :func:`read_side_rows` (pass a Spark accumulator as ``side_count_acc``
+    to feed its empty-sink guard).  The page audit is not part of the
+    stream — use :func:`audit_pages`."""
+    src = pages
     if repartition_by_url:
         src = src.repartition(repartition_by_url, F.xxhash64("url"))
-    return src.mapInPandas(_make_extract_batches(triples, sides),
-                           schema=EXTRACT_SCHEMA)
+    return pages_to_lines(src).mapInPandas(
+        _make_extract_batches(side_sink, side_count_acc),
+        schema=EXTRACT_SCHEMA if side_sink is None else TRIPLES_SCHEMA)
 
 
-# --- JVM-native html→text inversion (single-pass fast path) ----------------
+# --- JVM-native html→text inversion -----------------------------------------
 # html_to_text (pagesgen.py) is substring+replace — expressible natively, so
-# the fast path never ships html bytes to Python and never pays Python string
-# work for the inversion; Python receives ONLY the recovered dump line.
+# html bytes never cross into Python and the inversion costs no Python string
+# work; Python receives ONLY the recovered dump line.
 
 _H_PREFIX = "<html><body><pre>"
 _H_SUFFIX = "</pre></body></html>"
@@ -170,8 +213,8 @@ def _native_recovered(html_col):
 
 
 def pages_to_lines(pages: DataFrame) -> DataFrame:
-    """(line): the dump line per page — html inversion when possible, else
-    the text column (mirrors the Python fallback in _make_extract_batches)."""
+    """(line): the dump line per page — the html inversion when it
+    succeeds, else the text column."""
     cols = pages.columns
     if "html" in cols and "text" in cols:
         line = F.coalesce(_native_recovered(F.col("html")), F.col("text"))
@@ -182,106 +225,22 @@ def pages_to_lines(pages: DataFrame) -> DataFrame:
     return pages.select(line.alias("line"))
 
 
-def audit_pages(pages: DataFrame):
-    """Byte-identity audit, fully native: (pages, mismatches) row.  A page
-    passes iff the html→text inversion reproduces the text column exactly
-    (north_rule's per-url invariant).  One column-pruned scan, no Python."""
+def audit_pages(pages: DataFrame) -> DataFrame:
+    """Byte-identity audit, fully native: one (pages, mismatches) row.  A
+    page passes iff the html→text inversion reproduces the text column
+    exactly (north_rule's per-url invariant), so a null or non-conforming
+    html envelope counts as a mismatch.  One column-pruned scan, no
+    Python."""
     recovered = _native_recovered(F.col("html"))
     ok = recovered.eqNullSafe(F.col("text"))
     return pages.agg(
         F.count(F.lit(1)).alias("pages"),
-        F.sum(F.when(~ok, 1).otherwise(0)).alias("mismatches")).first()
-
-
-def _make_sink_batches(side_sink: str, side_count_acc=None):
-    """Single-pass batch iterator over (line) rows: yields 5-column triple
-    rows; side rows (incl. collision-class triples) accumulate across the
-    task's batches and are written once per task to ``side_sink``.  The
-    html→text inversion and the page audit happen JVM-side
-    (:func:`pages_to_lines` / :func:`audit_pages`) — Python never touches
-    html bytes.
-
-    The sink path may be a URI (``hdfs://``, ``s3a://``, ``file://``) or a
-    plain path: it is resolved IN-TASK via :func:`olkg.fsio.pa_fs`
-    (pyarrow), so executors write straight to shared storage — the cluster
-    precondition for the fast path.  ``side_count_acc`` (a Spark
-    accumulator) censuses written side rows so the driver can detect a sink
-    the executors wrote but it cannot see (see :func:`read_side_rows`)."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from .fsio import pa_fs, pjoin
-
-        side = _Cols(_COLS)
-        for pdf in batches:
-            out = _Cols(_TRIPLE_COLS)
-            for line in pdf["line"].tolist():
-                rec = parse_dump_line(line) if line is not None else None
-                if rec is None:
-                    continue
-                res = extract_record(rec[0], rec[4])
-                if res is None:
-                    continue
-                src_type = rec[0]
-                for t in res.triples:
-                    if _is_collision_triple(t.pred, t.obj_kind):
-                        side.append("triple", src_type, None, t.subj, t.pred,
-                                    t.obj, t.obj_kind, t.obj_datatype)
-                    else:
-                        if t.pred in _BLOCK_PREDS:
-                            side.append("block_id", src_type, None, t.subj,
-                                        None,
-                                        _BLOCK_PREDS[t.pred] + ":" + t.obj,
-                                        None, None)
-                        out.append(t.subj, t.pred, t.obj, t.obj_kind,
-                                   t.obj_datatype)
-                for key, name in res.author_names:
-                    side.append("author_name", src_type, None, key, None,
-                                name, None, None)
-                for creation, key in res.creation_refs:
-                    side.append("creation_ref", src_type, None, creation,
-                                None, key, None, None)
-                for uri, label in res.probes:
-                    side.append("probe", src_type, None, uri, None, label,
-                                None, None)
-            yield out.frame()
-
-        if len(side):
-            tbl = pa.table(
-                {n: pa.array(c, type=pa.string())
-                 for n, c in zip(side.names, side.cols)})
-            fs, sink_path = pa_fs(side_sink)
-            fs.create_dir(sink_path, recursive=True)
-            pq.write_table(
-                tbl, pjoin(sink_path, f"part-{uuid.uuid4().hex}.parquet"),
-                filesystem=fs, compression="zstd")
-            if side_count_acc is not None:
-                side_count_acc.add(len(side))
-
-    return _batches
-
-
-def extract_triples_with_side_sink(pages: DataFrame, side_sink: str,
-                                   repartition_by_url: int | None = None,
-                                   side_count_acc=None) -> DataFrame:
-    """Single-pass extraction: returns the (non-collision) triple stream;
-    side rows land in ``side_sink`` when the returned stream is executed.
-    The caller MUST run an action on the stream before reading the sink.
-    The page audit is NOT part of this stream — use :func:`audit_pages`.
-    Pass a Spark accumulator as ``side_count_acc`` to census side rows
-    written (feeds the empty-sink guard in :func:`read_side_rows`)."""
-    src = pages
-    if repartition_by_url:
-        src = src.repartition(repartition_by_url, F.xxhash64("url"))
-    return pages_to_lines(src).mapInPandas(
-        _make_sink_batches(side_sink, side_count_acc), schema=TRIPLES_SCHEMA)
+        F.sum(F.when(~ok, 1).otherwise(0)).alias("mismatches"))
 
 
 def read_side_rows(spark, side_sink: str,
                    expected_rows: int | None = None) -> DataFrame:
-    """Read the side sink written by :func:`extract_triples_with_side_sink`
+    """Read the side sink written by :func:`extract_pages`
     (EXTRACT_SCHEMA-shaped; empty DataFrame if the sink has no files).
 
     Existence checks go through Spark's Hadoop FileSystem (scheme-aware),

@@ -91,32 +91,6 @@ def lcsh_lookup_join(probes: DataFrame, lcsh: DataFrame) -> DataFrame:
     )
 
 
-def link_stage(extract_df: DataFrame, lcsh: DataFrame | None,
-               hot_threshold: int = 100_000, num_salts: int = 16,
-               sides: DataFrame | None = None) -> DataFrame:
-    """Derive the join-born triples from the extract rows and union them with
-    the record-local triples → the full (pre-dedup) triple stream.
-
-    ``sides``: where to read the small side-row kinds (author_name,
-    creation_ref, probe) from.  Defaults to ``extract_df`` — correct when
-    that is a materialized checkpoint or a cached DataFrame.  When
-    ``extract_df`` is an UNMATERIALIZED UDF stream, pass the (tiny,
-    persisted/parquet) side rows separately: each side branch, plus the
-    hot-key census, is its own plan subtree, and reading them off the raw
-    stream would re-run the expensive extraction once per subtree."""
-    if sides is None:
-        sides = extract_df
-    direct = (extract_df.filter(F.col("kind") == "triple")
-              .select("subj", "pred", "obj", "obj_kind", "obj_datatype"))
-
-    parts = [direct]
-    parts.append(join_born_triples(sides, lcsh, hot_threshold, num_salts))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,
                       hot_threshold: int = 100_000,
                       num_salts: int = 16) -> DataFrame:
@@ -136,6 +110,21 @@ def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,
                           F.col("obj").alias("label")))
         out = out.unionByName(lcsh_lookup_join(probes, lcsh))
     return out
+
+
+def linked_triples(sides: DataFrame, lcsh: DataFrame | None,
+                   hot_threshold: int = 100_000,
+                   num_salts: int = 16) -> DataFrame:
+    """The link stage's output before dedup: the join outputs
+    (:func:`join_born_triples`) ∪ the extract stage's collision-class
+    triples (kind='collision': direct triples whose predicate a join can
+    also produce).  Disjoint from the direct kind='triple' rows by
+    construction, so deduplicating the two sets apart composes to the
+    global A4 dedup."""
+    collision = (sides.filter(F.col("kind") == "collision")
+                 .select("subj", "pred", "obj", "obj_kind", "obj_datatype"))
+    return join_born_triples(sides, lcsh, hot_threshold,
+                             num_salts).unionByName(collision)
 
 
 def load_lcsh_ntriples(spark, path: str) -> DataFrame:

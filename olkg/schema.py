@@ -13,15 +13,17 @@ PAGES_SCHEMA = StructType([
 ])
 
 # Output of the extract stage: one unified row stream, discriminated by `kind`
-#   kind = 'triple'       → subj/pred/obj[/obj_kind/obj_datatype] populated
+#   kind = 'triple'       → a direct triple: subj/pred/obj/obj_kind[/obj_datatype]
+#   kind = 'collision'    → a direct triple whose predicate a join can also
+#                           produce (ol:author, dc:subject URI); deduplicated
+#                           with the join outputs, not with 'triple'
+#   kind = 'block_id'     → subj=entity uri, obj=identifier blocking key
+#                           ('isbn13:…', 'lccn:…', 'oclc:…')
 #   kind = 'probe'        → subj=entity uri, obj=normalized subject label (J2 input)
 #   kind = 'author_name'  → subj=author key, obj=name string (J1 build side)
 #   kind = 'creation_ref' → subj=creation uri, obj=author key (J1 probe side)
-#   kind = 'page'         → subj=url, obj='ok'|'mismatch' (byte-identity audit)
 EXTRACT_SCHEMA = StructType([
     StructField("kind", StringType(), False),
-    StructField("src_type", StringType(), True),
-    StructField("url", StringType(), True),
     StructField("subj", StringType(), True),
     StructField("pred", StringType(), True),
     StructField("obj", StringType(), True),

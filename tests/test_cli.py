@@ -1,6 +1,6 @@
-"""``python -m olkg.pipeline``: flags reach the pipeline entry points.
+"""``python -m olkg.pipeline``: flags reach the pipeline entry point.
 
-The session and both pipelines are replaced with recorders, so these tests
+The session and the pipeline are replaced with recorders, so these tests
 check only the argument plumbing of :func:`olkg.pipeline.main`.
 """
 
@@ -34,28 +34,25 @@ def calls(monkeypatch):
 
     monkeypatch.setattr(pipeline, "build_session", fake_build_session)
     monkeypatch.setattr(pipeline, "run_pipeline", recorder("run_pipeline"))
-    monkeypatch.setattr(pipeline, "run_pipeline_fast",
-                        recorder("run_pipeline_fast"))
     yield rec
     assert session.stopped
 
 
-def test_fast_postwrite_keep_raw(calls, capsys):
+def test_fast_postwrite(calls, capsys):
     pipeline.main(["--pages", "p", "--out", "o", "--fast",
-                   "--dedup-postwrite", "--keep-raw"])
-    fast = calls["run_pipeline_fast"]
-    assert (fast["pages"], fast["out"]) == ("p", "o")
-    assert fast["dedup_postwrite"] is True and fast["keep_raw"] is True
-    assert "run_pipeline" not in calls
-    assert '"mode": "run_pipeline_fast"' in capsys.readouterr().out
+                   "--dedup-postwrite"])
+    run = calls["run_pipeline"]
+    assert (run["pages"], run["out"]) == ("p", "o")
+    assert run["durable"] is False and run["dedup_postwrite"] is True
+    assert '"mode": "run_pipeline"' in capsys.readouterr().out
 
 
 def test_bare_invocation_runs_durable_with_resume(calls):
     pipeline.main(["--pages", "p", "--out", "o"])
     durable = calls["run_pipeline"]
+    assert durable["durable"] is True
     assert durable["resume"] is True
     assert durable["dedup_postwrite"] is False
-    assert "run_pipeline_fast" not in calls
 
 
 @pytest.mark.parametrize("flag", [
@@ -63,6 +60,7 @@ def test_bare_invocation_runs_durable_with_resume(calls):
     ["--dedup-partitions", "8"],
     ["--dedup-detect", "hashagg"],
     ["--no-keep-raw"],
+    ["--keep-raw"],
 ])
 def test_removed_flags_are_rejected(monkeypatch, flag):
     def no_session(**kwargs):

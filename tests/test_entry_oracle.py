@@ -77,6 +77,20 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"name", "n"}
 
 
+def test_cache_evicts_other_applications(spark):
+    """Inserting into the session cache drops every entry keyed on another
+    application id (a stopped session's handles), and keeps the live ones."""
+    app = spark.sparkContext.applicationId
+    entry_mod._CACHE[("kg", "app-foreign")] = object()
+    entry_mod._CACHE[("ivf", "app-foreign", "/layout")] = object()
+    live = {k for k in entry_mod._CACHE if k[1] == app}
+    entry_mod._cache_put(spark, ("probe", app), 1)
+    try:
+        assert set(entry_mod._CACHE) == live | {("probe", app)}
+    finally:
+        entry_mod._CACHE.pop(("probe", app), None)
+
+
 def test_ann_lsh_recall_vs_bruteforce(spark):
     """The LSH path must find a reasonable fraction of the true top-5."""
     from olkg.simsearch import cosine_topk_bruteforce, cosine_topk_lsh

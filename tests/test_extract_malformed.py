@@ -1,21 +1,21 @@
-"""Both Spark extract paths ≡ the pure-Python spec path, on malformed input.
+"""Both extract policies ≡ the pure-Python spec path, on malformed input.
 
-The durable path (:func:`olkg.extract.extract_pages`) and the single-pass
-path (:func:`olkg.extract.extract_triples_with_side_sink` plus its side sink,
-read back with :func:`olkg.extract.read_side_rows`) must each emit exactly
-the triple set ``olkg.triples.extract_line`` emits — over the fixture corpus
-and over adversarial lines: broken JSON, too few columns, a JSON array,
-duplicate keys, escaped or dot-segment keys, float/bool/dict field shapes.
-Lines the semantics skip are skipped by both paths; a page whose html
-envelope is not UTF-8 fails the run loudly instead of being dropped.
+The durable policy (:func:`olkg.extract.extract_pages` streaming every kind)
+and the fast policy (the same kernel streaming only the direct triples while
+the other kinds go to its side sink, read back with
+:func:`olkg.extract.read_side_rows`) must each emit exactly the triple set
+``olkg.triples.extract_line`` emits — over the fixture corpus and over
+adversarial lines: broken JSON, too few columns, a JSON array, duplicate
+keys, escaped or dot-segment keys, float/bool/dict field shapes.  Lines the
+semantics skip are skipped by both; a page whose html envelope is not UTF-8
+fails the run loudly instead of being dropped.
 """
 
 import json
 
 import pytest
 
-from olkg.extract import (extract_pages, extract_triples_with_side_sink,
-                          read_side_rows)
+from olkg.extract import extract_pages, read_side_rows
 from olkg.fixtures import corpus_lines
 from olkg.pagesgen import text_to_html
 from olkg.triples import extract_line
@@ -84,7 +84,8 @@ def _python_triples(lines):
 
 
 def _durable_triples(pages):
-    rows = (extract_pages(pages).filter("kind = 'triple'")
+    """Direct (kind='triple') ∪ collision-class (kind='collision') rows."""
+    rows = (extract_pages(pages).filter("kind IN ('triple', 'collision')")
             .select("subj", "pred", "obj", "obj_kind", "obj_datatype")
             .collect())
     return set(map(tuple, rows))
@@ -93,10 +94,10 @@ def _durable_triples(pages):
 def _single_pass_triples(spark, pages, sink):
     """Direct stream ∪ the collision-class triples routed to the sink."""
     acc = spark.sparkContext.accumulator(0)
-    direct = set(map(tuple, extract_triples_with_side_sink(
-        pages, sink, side_count_acc=acc).collect()))
+    direct = set(map(tuple, extract_pages(
+        pages, side_sink=sink, side_count_acc=acc).collect()))
     sides = read_side_rows(spark, sink, expected_rows=acc.value)
-    routed = set(map(tuple, sides.filter("kind = 'triple'").select(
+    routed = set(map(tuple, sides.filter("kind = 'collision'").select(
         "subj", "pred", "obj", "obj_kind", "obj_datatype").collect()))
     assert not direct & routed, "a triple took both routes"
     return direct | routed
@@ -130,14 +131,13 @@ def test_spark_extract_matches_python_on_adversarial_lines(spark, tmp_path):
 
 def test_non_utf8_html_fails_loudly(spark, tmp_path):
     """An html envelope holding non-UTF-8 bytes is never silently dropped:
-    the durable path's Python inversion raises UnicodeDecodeError and the
-    single-pass path's JVM decode raises MALFORMED_CHARACTER_CODING."""
+    the JVM-side decode both policies share raises
+    MALFORMED_CHARACTER_CODING."""
     line = _ed("/books/U8", title="T")
     bad = (b"<html><body><pre>" + line.encode("utf-8") + b"\xff\xfe"
            + b"</pre></body></html>")
     pages = spark.createDataFrame([("http://page/u8", bad, line)], PAGES_DDL)
-    with pytest.raises(Exception, match="UnicodeDecodeError"):
+    with pytest.raises(Exception, match="MALFORMED_CHARACTER_CODING"):
         extract_pages(pages).collect()
     with pytest.raises(Exception, match="MALFORMED_CHARACTER_CODING"):
-        extract_triples_with_side_sink(pages,
-                                       str(tmp_path / "sides")).collect()
+        extract_pages(pages, side_sink=str(tmp_path / "sides")).collect()

@@ -32,6 +32,16 @@ def pipeline_out(spark, corpus, tmp_path_factory):
     return out, pages_path, metrics
 
 
+@pytest.fixture(scope="module")
+def fast_out(spark, pipeline_out, tmp_path_factory):
+    """The fast policy over the same pages as ``pipeline_out``."""
+    out = str(tmp_path_factory.mktemp("olkg_fast_out"))
+    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
+    metrics = run_pipeline(spark, pipeline_out[1], out, lcsh=lcsh,
+                           durable=False, hot_threshold=100, num_salts=4)
+    return out, metrics
+
+
 def edges_set(spark, out):
     rows = spark.read.parquet(out + "/edges").collect()
     return {(r.subj, r.pred, r.obj, r.obj_kind, r.obj_datatype) for r in rows}
@@ -156,16 +166,10 @@ def test_skewed_corpus_still_correct(spark, tmp_path):
     assert metrics["text_mismatches"] == 0
 
 
-def test_fast_pipeline_matches_golden(spark, corpus, tmp_path_factory):
-    """Single-extraction fast mode: same golden set, NO duplicate edge rows
-    (the direct/join-born disjointness invariant), clean audit."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_fast_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_fast")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4)
+def test_fast_pipeline_matches_golden(spark, corpus, fast_out):
+    """Fast policy: same golden set, NO duplicate edge rows (the
+    direct/linked disjointness invariant), clean audit."""
+    out, metrics = fast_out
     edges = spark.read.parquet(out + "/edges")
     n_rows = edges.count()
     result = edges_set(spark, out)
@@ -180,19 +184,54 @@ def test_fast_pipeline_matches_golden(spark, corpus, tmp_path_factory):
     assert metrics["pages"] == len(corpus)
 
 
+def test_policies_give_identical_outputs(spark, pipeline_out, fast_out):
+    """One stage graph: durable and fast write the same edges,
+    canonical_map and nodes sets (and the same-sized export)."""
+    durable, fast = pipeline_out[0], fast_out[0]
+    for table in ("edges", "canonical_map", "nodes"):
+        want = spark.read.parquet(f"{durable}/{table}")
+        got = spark.read.parquet(f"{fast}/{table}").select(*want.columns)
+        want_rows = set(map(tuple, want.collect()))
+        assert want_rows, table
+        assert set(map(tuple, got.collect())) == want_rows, table
+    assert (spark.read.text(fast + "/export_nt").count()
+            == spark.read.parquet(durable + "/edges").count())
+
+
+@pytest.mark.parametrize("durable", [True, False])
+def test_text_mismatches_counted(spark, corpus, tmp_path, durable):
+    """A page whose text differs from its html inversion and a page with no
+    html both count in text_mismatches, under both policies; extraction
+    reads the html inversion when there is one, else the text."""
+    ok, differs, no_html = corpus[:3]
+    rows = [("http://page/ok", text_to_html(ok), ok),
+            ("http://page/differs", text_to_html(differs), differs + " "),
+            ("http://page/no-html", None, no_html)]
+    pages_path = str(tmp_path / "pages.parquet")
+    spark.createDataFrame(rows, "url string, html binary, text string") \
+        .write.parquet(pages_path)
+    out = str(tmp_path / "out")
+    metrics = run_pipeline(spark, pages_path, out, durable=durable,
+                           resume=False, with_canonical_map=False,
+                           export_nt=False)
+    assert metrics["pages"] == 3
+    assert metrics["text_mismatches"] == 2
+    assert edges_set(spark, out) == golden_triples([ok, differs, no_html])
+
+
 def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
     """dedup_pages: duplicate-content pages are dropped before extraction;
     the triple net effect is unchanged."""
-    from olkg.pipeline import run_pipeline_fast
     out = str(tmp_path_factory.mktemp("olkg_dedup_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_dup")) + "/pages.parquet"
     # 3x-duplicated corpus: same urls, same text
     dup = build_pages_df(spark, corpus)
     dup.union(dup).union(dup).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False, dedup_pages=True)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, durable=False,
+                           hot_threshold=100, num_salts=4,
+                           with_canonical_map=False, export_nt=False,
+                           dedup_pages=True)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
@@ -205,15 +244,14 @@ def test_fast_pipeline_dedup_pages_with_postwrite(spark, corpus,
     """A real crawl run wants BOTH page dedup (duplicate pages never pay
     extraction) and the decoupled post-write edge dedup — composed, the
     output is still golden-identical and duplicate-free."""
-    from olkg.pipeline import run_pipeline_fast
     out = str(tmp_path_factory.mktemp("olkg_dp_pw_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_dp_pw")) + "/pages.parquet"
     dup = build_pages_df(spark, corpus)
     dup.union(dup).union(dup).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                dedup_pages=True, dedup_postwrite=True)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, durable=False,
+                           hot_threshold=100, num_salts=4, export_nt=False,
+                           dedup_pages=True, dedup_postwrite=True)
     edges = spark.read.parquet(out + "/edges")
     result = edges_set(spark, out)
     assert edges.count() == len(result), "edges table contains duplicates"
@@ -223,8 +261,8 @@ def test_fast_pipeline_dedup_pages_with_postwrite(spark, corpus,
     assert metrics["pages"] == len(corpus)      # 3x input deduped to 1x
     assert metrics["stages"]["dedup_direct"]["dedup_plan"].startswith("hashagg")
     import os
-    # default keep_raw=False reclaims the raw table after the exactness
-    # census (raw == kept + dropped) verified the decomposition
+    # the fast policy reclaims the raw table after the exactness census
+    # (raw == kept + dropped) verified the decomposition
     assert not os.path.exists(out + "/edges_raw")
     assert metrics["stages"]["dedup_direct"]["raw_rows"] == (
         metrics["stages"]["dedup_direct"]["rows"]
@@ -232,13 +270,13 @@ def test_fast_pipeline_dedup_pages_with_postwrite(spark, corpus,
 
 
 def test_durable_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
-    """run_pipeline(dedup_postwrite=True): the linked checkpoint carries the
-    dedup hash/uid columns, the edges stage runs the decoupled
-    dedup_from_raw over it (plan on record), output golden-identical and
-    duplicate-free; a resume that drops edges+nodes reuses the annotated
-    linked checkpoint across the new stage boundary; and a postwrite
-    resume over a FUSED-mode linked checkpoint (no hash cols) falls back
-    to the fused dedup, recorded, same answer."""
+    """run_pipeline(dedup_postwrite=True): the extract checkpoint carries
+    the dedup hash/uid columns, the edges stage runs the decoupled
+    dedup_from_raw over its direct triples (plan on record), output
+    golden-identical and duplicate-free; a resume that drops edges+nodes
+    reuses the annotated extract checkpoint across the stage boundary; and
+    a postwrite resume over a FUSED-mode extract checkpoint (no hash cols)
+    falls back to the fused dedup, recorded, same answer."""
     out = str(tmp_path_factory.mktemp("olkg_dur_pw_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_dur_pw")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
@@ -246,8 +284,8 @@ def test_durable_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
     metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
                            hot_threshold=100, num_salts=4,
                            dedup_postwrite=True)
-    linked = spark.read.parquet(out + "/linked")
-    assert {"h1", "h2", "uid"} <= set(linked.columns)
+    extract = spark.read.parquet(out + "/extract")
+    assert {"h1", "h2", "uid"} <= set(extract.columns)
     edges = spark.read.parquet(out + "/edges")
     assert set(edges.columns) == {"subj", "pred", "obj", "obj_kind",
                                   "obj_datatype"}
@@ -258,7 +296,7 @@ def test_durable_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
     assert p == 1.0 and r == 1.0
     assert metrics["stages"]["canonicalize"]["dedup_plan"].startswith("hashagg")
 
-    # resume across the new boundary: linked (with hash cols) is reused,
+    # resume across the boundary: extract (with hash cols) is reused,
     # edges recomputed via the decoupled path, identical output
     shutil.rmtree(out + "/edges")
     shutil.rmtree(out + "/nodes")
@@ -286,7 +324,7 @@ def test_durable_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
 
 
 def test_direct_join_born_disjointness(spark, corpus):
-    """The fast mode's two-write dedup decomposition is sound iff no
+    """The two-dedup decomposition (direct vs linked) is sound iff no
     NON-collision direct triple carries a join-born predicate signature;
     verify on the full fixture corpus (which includes role=='Author'
     contributors, the known direct ol:author source)."""
@@ -296,7 +334,7 @@ def test_direct_join_born_disjointness(spark, corpus):
     collision = [t for t in golden if _is_collision_triple(t[1], t[3])]
     # the collision class is present (contributors emit direct ol:author) ...
     assert len(collision) > 0
-    # ... and is exactly what the extract UDF routes through the side sink:
+    # ... and is exactly what the extract kernel emits as kind='collision':
     # every ol:author and every dc:subject-URI triple, nothing else
     for t in collision:
         assert t[1] == V.OL_AUTHOR or (
@@ -433,16 +471,16 @@ def test_dedup_from_raw_exact_and_plans(spark):
 
 def test_fast_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
     """dedup_postwrite (raw write + decoupled hash-drop dedup job)
-    reproduces the identical golden edge set with no duplicate rows, and
-    records the decoupled stage walls + chosen dedup plan in metrics."""
-    from olkg.pipeline import run_pipeline_fast
+    reproduces the identical golden edge set with no duplicate rows,
+    records the decoupled stage walls + chosen dedup plan in metrics, and
+    reclaims the raw table once its census holds."""
     out = str(tmp_path_factory.mktemp("olkg_pw_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_pw")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                dedup_postwrite=True, keep_raw=True)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, durable=False,
+                           hot_threshold=100, num_salts=4, export_nt=False,
+                           dedup_postwrite=True)
     edges = spark.read.parquet(out + "/edges")
     n_rows = edges.count()
     result = edges_set(spark, out)
@@ -455,26 +493,22 @@ def test_fast_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
     assert metrics["triples"] == len(golden)
     assert metrics["text_mismatches"] == 0
     assert "extract_raw" in metrics["stages"]
-    assert metrics["stages"]["dedup_direct"]["dedup_plan"] == \
-        "hashagg-broadcast"
-    # keep_raw=True retains the raw stage table (recovery checkpoint /
-    # lineage anchor); its row count equals deduped rows + detected drops —
-    # the decomposition is exact (the default keep_raw=False verifies this
-    # same census before reclaiming the raw table)
-    raw = spark.read.parquet(out + "/edges_raw")
-    assert raw.count() == (metrics["stages"]["dedup_direct"]["rows"]
-                           + metrics["stages"]["dedup_direct"]["n_dropped_dups"])
-    # fast-path lineage covers every stage including the side sink census
+    dd = metrics["stages"]["dedup_direct"]
+    assert dd["dedup_plan"] == "hashagg-broadcast"
+    # the raw table is reclaimed after the exactness census: its row count
+    # equals deduped rows + detected drops
+    import os
+    assert not os.path.exists(out + "/edges_raw")
+    assert dd["raw_rows"] == dd["rows"] + dd["n_dropped_dups"]
+    # fast-policy lineage covers every stage including the side sink census
     lineage = spark.read.parquet(out + "/lineage")
     stages = {r.stage for r in lineage.select("stage").distinct().collect()}
     assert {"edges", "nodes", "canonical_map", "sides"} <= stages
-    # round-7: the edges lineage row carries the retention-contract census
-    # itself, so a resumed run can verify raw == kept + dropped without the
-    # original driver's metrics dict
+    # the edges lineage row carries the retention census itself, so a later
+    # reader can verify raw == kept + dropped without the metrics dict
     import json as _json
     detail_rows = (lineage.filter(F.col("stage") == "edges")
                    .select("detail").distinct().collect())
     census = _json.loads(detail_rows[0]["detail"])
-    assert census["raw_retained"] is True
-    assert census["rows"] == metrics["stages"]["dedup_direct"]["rows"]
-    assert (census["rows"] + census["n_dropped_dups"]) == raw.count()
+    assert census == {"rows": dd["rows"], "raw_rows": dd["raw_rows"],
+                      "n_dropped_dups": dd["n_dropped_dups"]}
